@@ -37,7 +37,10 @@ TOKEN_REGEX = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 FINGERPRINT_MOD = 1_000_000_007
 
 
-def tokens(text: Column) -> Column:
+def tokens(text: Column | str) -> Column:
+    """The engine's tokenization convention: lowercase, then split on
+    single spaces, keeping empty tokens — the split the DuckDB oracles
+    spell as string_split(lower(x), ' ')."""
     return F.split(F.lower(text), " ")
 
 
@@ -573,9 +576,12 @@ def generate_barrier(df, **exprs: Column):
     plain Project-defined columns into downstream lambdas, so any
     expensive array/HOF expression consumed per-element downstream must
     cross a Generate to be computed once (the defect class fixed in
-    commit c9c5eb7; README "HOF CSE"). This is the one shared home of
-    that workaround — callers across queries/ and operators/ use it
-    instead of hand-rolling the explode(array(struct(...))) shape."""
+    commit c9c5eb7; README "HOF CSE"). This is the shared spelling of
+    that workaround; tests/test_function_models.py pins why it exists.
+    A few older sites still hand-roll the same explode(array(...))
+    shape (the MinHash signature and verify barriers in
+    operators/dedup.py and dedup_index.py, the BPE merge loop, two
+    llm_curation queries); new code should call this instead."""
     named = [e.alias(k) for k, e in exprs.items()]
     out = df.withColumn("_gb", F.explode(F.array(F.struct(*named))))
     return out.withColumns(

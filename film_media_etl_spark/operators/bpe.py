@@ -46,6 +46,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.text import tokens
+
 
 def _merge_pair_expr(col, left: str, right: str):
     """Greedy leftmost application of one merge to a symbol array:
@@ -103,7 +105,7 @@ def learn_bpe_merges(
     import pandas as pd
 
     words = (
-        docs.select(F.explode(F.split(F.lower(text_col), " ")).alias("w"))
+        docs.select(F.explode(tokens(text_col)).alias("w"))
         .where(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -172,7 +174,7 @@ def apply_bpe_merges(docs: DataFrame, merges, *, text_col: str = "text", id_col:
     wpd = (
         docs.select(
             F.col(id_col),
-            F.explode(F.split(F.lower(text_col), " ")).alias("w"),
+            F.explode(tokens(text_col)).alias("w"),
         )
         .where(F.col("w") != "")
         .groupBy(id_col, "w")

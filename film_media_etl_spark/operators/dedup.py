@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..sources import ensure_parallelism
 
 
@@ -37,7 +38,24 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
 
 
 def _token_set(text: Column) -> Column:
-    return F.array_distinct(F.split(F.lower(text), " "))
+    return F.array_distinct(tokens(text))
+
+
+def _token_hashes(text: Column) -> Column:
+    """xxhash64 of every element of the text's token set, as array<long>:
+    the hashed set that MinHash, SimHash and the Jaccard verify share.
+    Distinct strings can collide, so callers that need a set of hashes
+    wrap it in array_distinct."""
+    return F.transform(_token_set(text), lambda t: F.xxhash64(t))
+
+
+def _band_hash(sig: Column, band: int, rows: int) -> Column:
+    """LSH bucket key of one band: xxhash64 over the band number and the
+    band's ``rows`` signature slots (1-based b*rows+1 .. b*rows+rows).
+    Every banding path calls this, so their buckets are the same."""
+    return F.xxhash64(
+        F.lit(band), *[F.element_at(sig, band * rows + r + 1) for r in range(rows)]
+    )
 
 
 def _shingle_set_from_toks(toks: Column, n: int) -> Column:
@@ -61,7 +79,7 @@ def _shingle_set_from_toks(toks: Column, n: int) -> Column:
 def _shingle_set(text: Column, n: int) -> Column:
     """Distinct word n-gram shingles of a text column (lowercased,
     space-split) — see _shingle_set_from_toks."""
-    return _shingle_set_from_toks(F.split(F.lower(text), " "), n)
+    return _shingle_set_from_toks(tokens(text), n)
 
 
 def token_jaccard_pairs(
@@ -248,7 +266,7 @@ def minhash_signature(text: Column, *, num_hashes: int) -> Column:
     the persisted dedup index (operators/dedup_index.py), so the two
     paths cannot drift — the index-probe parity test depends on it."""
     _max_long = (1 << 63) - 1
-    th = F.transform(_token_set(text), lambda t: F.xxhash64(t))
+    th = _token_hashes(text)
     seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
     return F.aggregate(
         th,
@@ -287,12 +305,7 @@ def minhash_banded(
         # band-collide with each other on the sentinel minima)
         .where(F.element_at("mhs", 1) != F.lit(_max_long))
     )
-    bhash = [
-        F.xxhash64(
-            F.lit(b), *[F.element_at("mhs", b * rows + r + 1) for r in range(rows)]
-        ).alias(f"bh{b}")
-        for b in range(bands)
-    ]
+    bhash = [_band_hash(F.col("mhs"), b, rows).alias(f"bh{b}") for b in range(bands)]
     with_bands = sig.select("doc_id", "nt", *bhash)
     band_structs = F.array(
         *[
@@ -402,9 +415,7 @@ def minhash_lsh_pairs(
     # cheaper on the verify stage). Open text vocabularies take the
     # array_intersect fallback — that is the expected 100 TB path, and
     # the probe costs one map-side-combined count-distinct scan.
-    tok_hashes = F.array_distinct(
-        F.transform(_token_set(F.col(text_col)), lambda t: F.xxhash64(t))
-    )
+    tok_hashes = F.array_distinct(_token_hashes(F.col(text_col)))
     ph = _perfect_hash_plan(docs, tok_hashes)
     if ph is not None:
         seed, nwords = ph
@@ -489,8 +500,7 @@ def minhash_lsh_pairs(
 def simhash_bits(text: Column, *, nbits: int = 64) -> Column:
     """64-bit SimHash of the token set: bit j of the signature is the sign
     of sum over tokens of (+1 if bit j of xxhash64(token) else -1)."""
-    toks = _token_set(text)
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
+    hashes = _token_hashes(text)
     # bit masks as signed-64 literals (bit 63 is the sign bit in two's complement)
     masks = [(1 << j) if j < 63 else -(1 << 63) for j in range(nbits)]
     def _merge_for(m: int):
@@ -650,9 +660,10 @@ def minhash_lsh_survivors(
     Spark stops scanning a bucket at the doc's first confirmed
     duplicate — on a saturated corpus that is almost immediately, and
     wall tracks N (pinned by tests/test_dedup_recall.py). Bands and
-    signatures are identical to minhash_lsh_pairs (same hash mixing, so
-    the decision sets agree — also pinned); no first-band dedup is
-    needed because EXISTS is idempotent across a pair's bands. Cost
+    signatures are identical to minhash_lsh_pairs (both call
+    minhash_signature and _band_hash, so the decision sets agree — also
+    pinned); no first-band dedup is needed because EXISTS is idempotent
+    across a pair's bands. Cost
     note: token-hash arrays ride the banded shuffle (bands x corpus),
     the price of verifying inside the join; rows-only correctness
     (hash-seeded).
@@ -690,9 +701,8 @@ def minhash_lsh_survivors(
     docs = ensure_parallelism(docs)
     rows = num_hashes // bands
     _max_long = (1 << 63) - 1
-    th = F.transform(_token_set(F.col(text_col)), lambda t: F.xxhash64(t))
+    tok_hashes = F.array_distinct(_token_hashes(F.col(text_col)))
     sig_arr = minhash_signature(F.col(text_col), num_hashes=num_hashes)
-    tok_hashes = F.array_distinct(th)
     sig = docs.select(
         F.col(id_col).alias("doc_id"),
         tok_hashes.alias("toks"),
@@ -703,9 +713,7 @@ def minhash_lsh_survivors(
         *[
             F.struct(
                 F.lit(b).alias("band"),
-                F.xxhash64(
-                    F.lit(b), *[F.element_at("mhs", b * rows + r + 1) for r in range(rows)]
-                ).alias("bhash"),
+                _band_hash(F.col("mhs"), b, rows).alias("bhash"),
             )
             for b in range(bands)
         ]
@@ -816,6 +824,42 @@ def simhash_survivors(
     )
 
 
+def _shingle_hash_pair(toks: Column, pos: Column, k: int) -> list[Column]:
+    """Columns (h1, h2) keying the k-token shingle at 1-based ``pos``."""
+    # Shingle identity as a 128-bit hash pair (optimization round 11,
+    # guide §2.3 "shuffle keys instead of payloads"): the k-token
+    # shingle STRING was built per position (array_join copy) and then
+    # shuffled TWICE (the dup-detection aggregate and the join back).
+    # Two xxhash64 chains over the token-array slice replace it — no
+    # string is ever materialized, and the shuffled key is 16 bytes
+    # regardless of k. h1 chains the slice from Spark's default seed;
+    # h2 chains it from the seed hash(1), because xxhash64 hashes its
+    # arguments left to right, each seeded by the running hash. The
+    # literal must come FIRST: xxhash64(slice, lit(1)) would hash 1
+    # seeded by h1, making h2 a pure function of h1 and the key only
+    # 64 bits wide (~S²/2^65 expected collisions, tens of thousands at
+    # S = 10^12 occurrences). Treating differently-seeded XXH64 chains
+    # as independent draws, two DIFFERENT shingles are conflated only
+    # if both collide: for S shingle occurrences the union bound on ANY
+    # such pair is ~S²/2^129 (< 1e-14 at S = 10^12, i.e. 100 TB scale).
+    # This is a non-cryptographic whp argument, not a guarantee; the
+    # round-10 md5 attempt bought a stronger one and lost on
+    # MessageDigest CPU, while xxhash64 over the slice is codegen'd and
+    # allocation-free. The DuckDB oracle still computes string-keyed
+    # groups, so any collision on real data would fail the hash check
+    # loudly. Hashing the ARRAY (not a joined string) keeps token
+    # boundaries significant: each element chains through the running
+    # hash, so ["a b","c"] and ["a","b c"] (whose space-joins coincide)
+    # land in different chains — boundary ambiguity is reduced to the
+    # same collision bound instead of being a GUARANTEED merge as with
+    # join-then-hash.
+    shingle = F.slice(toks, pos, k)
+    return [
+        F.xxhash64(shingle).alias("h1"),
+        F.xxhash64(F.lit(1), shingle).alias("h2"),
+    ]
+
+
 def exact_substring_dedup(
     docs: DataFrame,
     *,
@@ -879,30 +923,10 @@ def exact_substring_dedup(
     span itself, exactly. Reference kin: dedup-on-load (etl:69-77)
     dedups whole rows; this is its intra-document, token-level big
     sibling."""
-    toks = F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), " ")
+    toks = tokens(F.coalesce(F.col(text_col), F.lit("")))
     t = ensure_parallelism(docs).select(
         F.col(id_col).alias("doc_id"), toks.alias("toks")
     )
-    # Shingle identity as a 128-bit hash pair (optimization round 11,
-    # guide §2.3 "shuffle keys instead of payloads"): the k-token
-    # shingle STRING was built per position (array_join copy) and then
-    # shuffled TWICE (the dup-detection aggregate and the join back).
-    # Two independent xxhash64 draws over the token-array slice replace
-    # it — no string is ever materialized, and the shuffled key is 16
-    # bytes regardless of k. Collision safety: two DIFFERENT shingles
-    # are only conflated if both 64-bit hashes collide — for a corpus
-    # of S shingle occurrences the union-bound probability of ANY such
-    # pair is ~S²/2^129 (< 1e-14 even at S = 10^12, i.e. 100 TB scale)
-    # — the same 128-bit-whp argument as the round-10 md5 attempt,
-    # which lost on MessageDigest CPU; xxhash64 over the slice is
-    # codegen'd and allocation-free. The DuckDB oracle still computes
-    # string-keyed groups, so any collision on real data would fail the
-    # hash check loudly. Hashing the ARRAY (not a joined string) keeps
-    # token boundaries significant: xxhash64 chains each element
-    # through the running hash, so ["a b","c"] and ["a","b c"] (whose
-    # space-joins coincide) land in different chains — boundary
-    # ambiguity is reduced to the same 128-bit collision bound instead
-    # of being a GUARANTEED merge as with join-then-hash.
     occ = t.where(F.size("toks") >= k).select(
         "doc_id",
         F.explode(F.sequence(F.lit(1), F.size("toks") - (k - 1))).alias("pos"),
@@ -910,8 +934,7 @@ def exact_substring_dedup(
     ).select(
         "doc_id",
         "pos",
-        F.xxhash64(F.slice(F.col("toks"), F.col("pos"), k)).alias("h1"),
-        F.xxhash64(F.slice(F.col("toks"), F.col("pos"), k), F.lit(1)).alias("h2"),
+        *_shingle_hash_pair(F.col("toks"), F.col("pos"), k),
     )
     # radix-encoded (doc_id, pos) order, guarded: evaluating the
     # encoding for an out-of-radix position is a LOUD runtime error, not

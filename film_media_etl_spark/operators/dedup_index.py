@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import ensure_parallelism
-from .dedup import _token_set, minhash_banded
+from .dedup import _token_hashes, minhash_banded
 
 _NUM_HASHES = 30
 _BANDS = 5
@@ -71,9 +71,7 @@ def build_dedup_index(
         docs, id_col=id_col, text_col=text_col, num_hashes=num_hashes, bands=bands
     )
     banded.write.mode("overwrite").parquet(f"{index_dir}/bands")
-    th = F.array_distinct(
-        F.transform(_token_set(F.col(text_col)), lambda t: F.xxhash64(t))
-    )
+    th = F.array_distinct(_token_hashes(F.col(text_col)))
     sigs = docs.select(
         F.col(id_col).alias("doc_id"), th.alias("tok_hashes"), F.size(th).alias("nt")
     ).where(F.col("nt") > 0)
@@ -290,9 +288,7 @@ def probe_dedup_frames(
     )
     for p in range(bands - 1):
         probe_banded = probe_banded.withColumnRenamed(f"prev{p}", f"pprev{p}")
-    th = F.array_distinct(
-        F.transform(_token_set(F.col(text_col)), lambda t: F.xxhash64(t))
-    )
+    th = F.array_distinct(_token_hashes(F.col(text_col)))
     probe_sigs = new_docs.select(
         F.col(id_col).alias("probe_id"), th.alias("ptoks")
     )

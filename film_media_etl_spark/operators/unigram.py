@@ -48,6 +48,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
+
 MAX_PIECE_LEN = 6
 VOCAB_SIZE = 64  # multi-char pieces kept (plus full character coverage)
 _LOGP_DEC = "decimal(20,6)"
@@ -56,7 +58,7 @@ _LOGP_DEC = "decimal(20,6)"
 def word_counts(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
     """(w, n): the deduplicated word vocabulary with counts."""
     return (
-        docs.select(F.explode(F.split(F.lower(text_col), " ")).alias("w"))
+        docs.select(F.explode(tokens(text_col)).alias("w"))
         .where(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -226,7 +228,7 @@ def word_counts_per_doc(
     return (
         docs.select(
             F.col(id_col),
-            F.explode(F.split(F.lower(text_col), " ")).alias("w"),
+            F.explode(tokens(text_col)).alias("w"),
         )
         .where(F.col("w") != "")
         .groupBy(id_col, "w")

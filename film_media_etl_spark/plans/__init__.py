@@ -4,6 +4,7 @@ from .audit import (
     assert_pushed_filters,
     assert_read_schema_pruned,
     assert_whole_stage_codegen,
+    formatted_plan,
     physical_plan,
     plan_summary,
 )
@@ -14,6 +15,7 @@ __all__ = [
     "assert_pushed_filters",
     "assert_read_schema_pruned",
     "assert_whole_stage_codegen",
+    "formatted_plan",
     "physical_plan",
     "plan_summary",
 ]

@@ -23,6 +23,13 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def formatted_plan(df: DataFrame) -> str:
+    """The ``df.explain("formatted")`` text, returned instead of printed."""
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
 def plan_summary(df: DataFrame) -> dict[str, int]:
     """Operator census of the physical plan — exchanges and single-
     partition exchanges are the numbers to watch when scaling up."""

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..operators.dedup import connected_components, token_jaccard_pairs
 from ..sources import ensure_parallelism, load_table
 from .registry import register
@@ -94,7 +95,7 @@ def ext_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     t = generate_barrier(
-        docs.select("doc_id", "text"), toks=F.split(F.lower("text"), " ")
+        docs.select("doc_id", "text"), toks=tokens("text")
     )
     n = F.size("toks")
     bgs = F.zip_with(
@@ -346,7 +347,7 @@ def ext_token_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     c = (
         docs.select(
-            F.explode(F.split(F.lower("text"), " ")).alias("token")
+            F.explode(tokens("text")).alias("token")
         )
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -414,7 +415,7 @@ def ext_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     every document yields at least one chunk, and both engines compute
     n_chunks with the identical floor((n+offset)/stride) arithmetic."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    t = docs.select("doc_id", F.split(F.lower("text"), " ").alias("toks"))
+    t = docs.select("doc_id", tokens("text").alias("toks"))
     n = F.size("toks")
     n_chunks = F.greatest(
         F.lit(1),
@@ -473,7 +474,7 @@ def ext_vocab_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     tok = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "tok"),
+        F.posexplode(tokens("text")).alias("pos", "tok"),
     )
     vocab = (
         tok.groupBy("tok")
@@ -538,7 +539,7 @@ def ext_trending_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.join(docs, ev.event_id % 500 == docs.doc_id)
         .select(
             F.to_date("ts").alias("day"),
-            F.explode(F.split(F.lower("text"), " ")).alias("tok"),
+            F.explode(tokens("text")).alias("tok"),
         )
     )
     c = tok.groupBy("day", "tok").agg(F.count(F.lit(1)).alias("cnt"))

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.text import tokens
 from ..operators.bloom import bloom_build, bloom_contains
 from ..operators.dedup import _shingle_set
 from ..sources import ensure_parallelism, load_table
@@ -219,7 +220,7 @@ def ngram_diversity(docs: DataFrame) -> DataFrame:
     Spark's partial-distinct map side, so the exchange carries distinct
     grams, never gram occurrences."""
     t = docs.select(
-        "doc_id", "source", F.split(F.lower("text"), " ").alias("toks")
+        "doc_id", "source", tokens("text").alias("toks")
     )
     n = F.size("toks")
     tg_len = F.greatest(n - 2, F.lit(0))

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -196,7 +197,7 @@ def ext_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "lang",
-        F.array_distinct(F.split(F.lower("text"), " ")).alias("toks"),
+        F.array_distinct(tokens("text")).alias("toks"),
     )
     a, b = t.alias("a"), t.alias("b")
     sa, sb = F.size(F.col("a.toks")), F.size(F.col("b.toks"))
@@ -412,7 +413,7 @@ def ext_dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # barrier 1: the token array (split is re-evaluated per element by
     # any HOF lambda that closes over it as an inline expression)
     t = generate_barrier(
-        docs.select("doc_id", "text"), toks=F.split(F.lower("text"), " ")
+        docs.select("doc_id", "text"), toks=tokens("text")
     ).where(F.size("toks") >= _WIN_K)
     # barrier 2: the gram-hash array — the sliding-min gets below read
     # it per element, so it must be an attribute, not an expression

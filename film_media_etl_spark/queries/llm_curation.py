@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..functions.vectors import cosine, oracle_cosine, to_double_vec
 from ..operators.dedup import _shingle_set
 from ..sources import ensure_parallelism, load_table
@@ -344,7 +345,7 @@ def ext_dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of ext_dedup_exact — repeated boilerplate dies corpus-wide even
     when full documents differ."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    t = docs.select("doc_id", F.split(F.lower("text"), " ").alias("toks"))
+    t = docs.select("doc_id", tokens("text").alias("toks"))
     n = F.size("toks")
     nc = F.greatest(F.lit(1), F.ceil(n / F.lit(float(_PARA))).cast("int"))
     chunks = t.select(

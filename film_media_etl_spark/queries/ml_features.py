@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -65,7 +66,7 @@ def ext_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines and replays."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     tok = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term")
+        "doc_id", F.explode(tokens("text")).alias("term")
     ).where(F.col("term") != "")
     return tok.groupBy(
         "doc_id", F.expr(_bucket_expr("term")).cast("int").alias("bucket")
@@ -232,7 +233,7 @@ def ext_linear_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     text) keep the bias via the left join, so every input row scores."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     tok = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term")
+        "doc_id", F.explode(tokens("text")).alias("term")
     ).where(F.col("term") != "")
     feat = tok.groupBy(
         "doc_id", F.expr(_bucket_expr("term")).cast("int").alias("bucket")
@@ -442,7 +443,7 @@ def ext_linear_gradient_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     gradient sum stays inside BIGINT past 10^9 documents."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     tok = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term")
+        "doc_id", F.explode(tokens("text")).alias("term")
     ).where(F.col("term") != "")
     feat = (
         tok.select("doc_id", F.expr(_bucket_expr("term")).cast("int").alias("bucket"))

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import generate_barrier, tokens
 from ..sources import ensure_parallelism, load_table
 from .registry import register
 
@@ -282,33 +283,37 @@ def _passes(cols: dict[str, Column]) -> Column:
     return passes
 
 
+_REP_COLS = ("_rtoks", "_rlines", "_rparas", "_rga")
+
+
+def _with_rep_arrays(df: DataFrame, text_col: str) -> tuple[DataFrame, dict[str, Column]]:
+    """The repetition prologue both surfaces share: split the text into
+    tokens, lines and paragraphs (columns ``_rtoks``/``_rlines``/
+    ``_rparas``), then build and sort every gram array ONCE per row
+    behind a Generate barrier (``_rga``, the _rep_arrays struct).
+    Projections don't cut it (CollapseProject inlines them into each
+    consumer), and HOF lambdas re-evaluate outer arrays per element.
+    Returns the frame and the 13 signal expressions over its columns."""
+    txt = F.coalesce(F.col(text_col), F.lit(""))
+    pre = df.select(
+        "*",
+        tokens(txt).alias("_rtoks"),
+        F.split(txt, "\n").alias("_rlines"),
+        F.split(txt, "\n\n").alias("_rparas"),
+    )
+    b = generate_barrier(pre, _rga=_rep_arrays(F.col("_rtoks")))
+    cols = _signal_cols(*[F.col(c) for c in _REP_COLS])
+    return b, cols
+
+
 def repetition_signals(docs: DataFrame) -> DataFrame:
     """The 13-signal vector + Gopher-threshold verdict per document."""
-    from ..functions.text import generate_barrier
-
-    txt = F.coalesce(F.col("text"), F.lit(""))
-    toks = F.split(F.lower(txt), " ")
-    base = ensure_parallelism(docs).select(
-        "doc_id",
-        toks.alias("toks"),
-        F.split(txt, "\n").alias("lines"),
-        F.split(txt, "\n\n").alias("paras"),
-    )
-    # Generate barrier: build + sort every gram array ONCE per row.
-    # Projections don't cut it (CollapseProject inlines them into each
-    # consumer), and HOF lambdas re-evaluate outer arrays per element —
-    # the explode of a 1-element struct array is the one construct that
-    # genuinely materializes these before the fold columns consume them.
-    b = base.withColumn("_ga", F.explode(F.array(_rep_arrays(F.col("toks")))))
-    cols = _signal_cols(F.col("toks"), F.col("lines"), F.col("paras"), F.col("_ga"))
-    # SECOND barrier for the signal values themselves (optimization
-    # round 11): every signal expression is consumed TWICE — as an
-    # output column and inside the passes_repetition AND-chain — and
-    # CollapseProject inlines projection-defined columns into each
-    # consumer, so the report re-ran all 13 folds. Materializing the
-    # signal struct once halves the fold work (same trap, same cure as
-    # the gram arrays above; measured full-query min 4.63 -> 2.06s on
-    # one window at sf0.1).
+    b, cols = _with_rep_arrays(ensure_parallelism(docs).select("doc_id", "text"), "text")
+    # SECOND barrier for the signal values themselves: every signal
+    # expression is consumed TWICE — as an output column and inside the
+    # passes_repetition AND-chain — and CollapseProject inlines
+    # projection-defined columns into each consumer, so without it the
+    # report would run all 13 folds twice.
     sig = generate_barrier(
         b, _sig=F.struct(*[c.alias(name) for name, c in cols.items()])
     )
@@ -333,33 +338,20 @@ def with_repetition_verdict(
     batch curation pipeline and the streaming curation gate both call
     (round-8 verdict "Next round #1"), so the thresholds, the floor, and
     the signal definitions cannot drift from ext_repetition_signals: all
-    three surfaces read the same _signal_cols/_passes expressions.
+    three surfaces read the same _with_rep_arrays/_passes expressions.
 
-    Map-side and stateless (streaming-safe): one Project materializes
-    the token/line/paragraph splits as attributes, one Generate barrier
-    materializes the 9 sorted gram arrays, and the verdict is a single
-    fold chain over those attributes — zero shuffle, no lambda ever
-    indexes an outer array (the O(m^2) HOF trap this module's docstring
-    documents). NULL text verdicts TRUE ('' has no repetition and is
-    under any positive floor): the curation gate's too_short tier owns
-    null text."""
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    pre = df.select(
-        "*",
-        F.split(F.lower(txt), " ").alias("_rtoks"),
-        F.split(txt, "\n").alias("_rlines"),
-        F.split(txt, "\n\n").alias("_rparas"),
-    )
-    b = pre.withColumn("_rga", F.explode(F.array(_rep_arrays(F.col("_rtoks")))))
-    cols = _signal_cols(
-        F.col("_rtoks"), F.col("_rlines"), F.col("_rparas"), F.col("_rga")
-    )
+    Map-side and stateless (streaming-safe): the _with_rep_arrays
+    prologue materializes the splits and the 9 sorted gram arrays, and
+    the verdict is a single fold chain over those attributes — zero
+    shuffle, no lambda ever indexes an outer array (the O(m^2) HOF trap
+    this module's docstring documents). NULL text verdicts TRUE ('' has
+    no repetition and is under any positive floor): the curation gate's
+    too_short tier owns null text."""
+    b, cols = _with_rep_arrays(df, text_col)
     verdict = _passes(cols)
     if min_tokens > 0:
         verdict = (F.size("_rtoks") < min_tokens) | verdict
-    return b.withColumn(out_col, verdict).drop(
-        "_rtoks", "_rlines", "_rparas", "_rga"
-    )
+    return b.withColumn(out_col, verdict).drop(*_REP_COLS)
 
 
 _ORACLE = """

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import generate_barrier
+from ..functions.text import generate_barrier, tokens
 from ..operators.dedup import _shingle_set_from_toks
 from ..sources import ensure_parallelism, load_table
 from .registry import register
@@ -54,7 +54,7 @@ def source_shingles(docs: DataFrame, *, n: int = _SHINGLE) -> DataFrame:
     per shingle position."""
     step = generate_barrier(
         docs.filter(F.col("text").isNotNull()).select("source", "text"),
-        toks=F.split(F.lower("text"), " "),
+        toks=tokens("text"),
     )
     grams = _shingle_set_from_toks(F.col("toks"), n)
     return step.select("source", F.explode(grams).alias("shingle")).distinct()

@@ -22,6 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..queries.scale_ops import cms_cells
 from .ingest_dedup import read_documents_stream
 from .sinks import read_snapshot, write_snapshot
@@ -51,7 +52,7 @@ def start_cms_stream(
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         toks = batch_df.select(
-            F.explode(F.split(F.lower("text"), " ")).alias("w")
+            F.explode(tokens("text")).alias("w")
         ).where(F.col("w") != "")
         merged = merge_cms(
             read_snapshot(spark, snapshot_path, before_batch=batch_id),

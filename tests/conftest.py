@@ -78,7 +78,7 @@ _AUDIT_FILES = {
 }
 
 
-def pytest_collection_modifyitems(items):
+def pytest_collection_modifyitems(config, items):
     """Tier the suite (see pytest.ini): test_parity.py -> `parity`,
     test_streaming.py -> `streaming`, the physical audits -> `audit`,
     everything else -> `unit`. File-level assignment keeps the tiers
@@ -95,28 +95,35 @@ def pytest_collection_modifyitems(items):
     zero failures and reported tests_ok=false for purely budgetary
     reasons). The ROUND GATE is unchanged — run
     `SPARK_GRAFT_FULL_TESTS=1 pytest tests/ -q` (documented in
-    pytest.ini); the gated tiers still run individually via their
-    markers, and every skip names the switch."""
+    pytest.ini). A `-m` expression that names a gated tier (`-m audit`,
+    `-m "unit or streaming"`) runs that tier too: asking for it by name
+    is the opt-in. Every skip names both switches."""
     import os
+    import re
 
     import pytest as _pytest
 
     full = os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
+    markexpr = config.getoption("markexpr", default="") or ""
+    gated = {
+        tier: not full and not re.search(rf"\b{tier}\b", markexpr)
+        for tier in ("streaming", "audit")
+    }
     gated_skip = _pytest.mark.skip(
         reason="streaming/audit tier: driver-budget default skips it; "
-        "set SPARK_GRAFT_FULL_TESTS=1 (the round gate) to run"
+        "set SPARK_GRAFT_FULL_TESTS=1 (the round gate) or select the "
+        "tier with -m to run"
     )
     for item in items:
         fname = item.fspath.basename
         if fname == "test_parity.py":
-            item.add_marker(_pytest.mark.parity)
+            tier = "parity"
         elif fname == "test_streaming.py":
-            item.add_marker(_pytest.mark.streaming)
-            if not full:
-                item.add_marker(gated_skip)
+            tier = "streaming"
         elif fname in _AUDIT_FILES:
-            item.add_marker(_pytest.mark.audit)
-            if not full:
-                item.add_marker(gated_skip)
+            tier = "audit"
         else:
-            item.add_marker(_pytest.mark.unit)
+            tier = "unit"
+        item.add_marker(getattr(_pytest.mark, tier))
+        if gated.get(tier):
+            item.add_marker(gated_skip)

@@ -2379,3 +2379,47 @@ def test_shard_layout_reconciles_deterministic_and_balanced(spark):
     # boundary keys frame the shard's internal order and are md5 hex
     for m in manifest.values():
         assert len(m["first_key"]) == 32 and m["first_key"] <= m["last_key"]
+
+
+def test_substring_dedup_hash_pair_is_not_chained(spark):
+    """exact_substring_dedup keys shingles by (h1, h2) and claims 128
+    bits. Spark's xxhash64 hashes its arguments left to right, each
+    seeded by the running hash, so xxhash64(slice, 1) would equal
+    XXH64.hashInt(1, seed=h1): h2 a pure function of h1, and every h1
+    collision a full key collision. The literal must seed the chain."""
+    from film_media_etl_spark.functions.text import tokens
+    from film_media_etl_spark.operators.dedup import _shingle_hash_pair
+
+    rng = random.Random(SEED)
+    rows = [(" ".join(rng.choice(string.ascii_lowercase) for _ in range(8)),) for _ in range(200)]
+    df = spark.createDataFrame(rows, "text string").select(tokens("text").alias("toks"))
+    got = df.select(*_shingle_hash_pair(F.col("toks"), F.lit(2), 5)).collect()
+    xxh64 = spark._jvm.org.apache.spark.sql.catalyst.expressions.XXH64
+    chained = [r for r in got if r["h2"] == xxh64(r["h1"]).hashInt(1)]
+    assert not chained, f"h2 derived from h1 on {len(chained)}/{len(got)} rows"
+    assert len({(r["h1"], r["h2"]) for r in got}) == len({r["h1"] for r in got})
+
+
+def test_generate_barrier_evaluates_hof_once(spark):
+    """Why generate_barrier exists: a Project-defined HOF column with two
+    consumers is inlined into both (here the Filter is pushed below the
+    Project with the alias substituted), and HOFs get no subexpression
+    elimination, so the array is rebuilt per consumer. Behind the
+    barrier the optimized plan computes it once."""
+    from film_media_etl_spark.functions.text import generate_barrier
+
+    df = spark.createDataFrame([(1, [3, 1, 2]), (2, [5, 4]), (3, [6])], "id int, a array<int>")
+    hof = F.array_sort(F.transform("a", lambda x: x * 7))
+
+    def consume(d):
+        return d.where(F.size("s") > 1).select("id", F.element_at("s", 1).alias("lo"))
+
+    plain = consume(df.withColumn("s", hof))
+    barred = consume(generate_barrier(df, s=hof))
+
+    def copies(d):
+        return d._jdf.queryExecution().optimizedPlan().toString().count("array_sort(transform(")
+
+    assert copies(plain) > 1
+    assert copies(barred) == 1
+    assert sorted(plain.collect()) == sorted(barred.collect()) == [(1, 7), (2, 28)]

@@ -84,6 +84,47 @@ def test_dedup_minhash_no_cartesian(spark):
     assert_no_cartesian(df)
 
 
+def test_minhash_survivors_merge_scans_buckets_in_id_order(spark):
+    """minhash_lsh_survivors settles each bucket in O(1) only while three
+    optimizer behaviours hold: hint("merge") plans a sort-merge semi
+    join, the inert `_rk >= 1` conjunct keeps the ordering window alive,
+    and the window's (band, bhash, doc_id) sort survives into the join's
+    build side with no second Sort in between. Losing any one of them
+    keeps the answer but makes saturated buckets quadratic again."""
+    from film_media_etl_spark.plans import physical_plan
+
+    plan = physical_plan(_q("ext_dedup_minhash_survivors", spark))
+    lines = re.sub(r"#\d+L?", "", plan).splitlines()  # drop expression ids
+
+    def node(line):
+        m = re.search(r"(?:\+- |:- )(\w+)", line)
+        return (m.start(1), m.group(1)) if m else (None, None)
+
+    smj = [i for i, l in enumerate(lines) if "SortMergeJoin" in l and "LeftSemi" in l]
+    assert len(smj) == 1, "survivors probe is no longer one sort-merge semi join"
+    col = node(lines[smj[0]])[0]
+    # the build side is the join's last child; follow its unary chain down
+    start = next(
+        i for i in range(smj[0] + 1, len(lines))
+        if node(lines[i])[0] == col + 3 and lines[i][col:col + 3] == "+- "
+    )
+    chain = [(lines[start], node(lines[start])[1])]
+    for line in lines[start + 1:]:
+        c, name = node(line)
+        if c != node(chain[-1][0])[0] + 3:
+            break
+        chain.append((line, name))
+    names = [name for _, name in chain]
+    assert "Window" in names, f"build side lost the ordering window: {names}"
+    w = names.index("Window")
+    assert "Sort" not in names[:w], f"second Sort between window and join: {names}"
+    window, below = chain[w][0], chain[w + 1][0]
+    assert "row_number()" in window and "[band, bhash]" in window, window
+    assert names[w + 1] == "Sort" and (
+        "[band ASC NULLS FIRST, bhash ASC NULLS FIRST, doc_id ASC NULLS FIRST]" in below
+    ), below
+
+
 def test_asof_join_single_shuffle_no_cartesian(spark):
     """The union+window as-of join must cost exactly one data shuffle
     (the key partition for the window) — a range-join formulation would

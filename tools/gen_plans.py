@@ -19,16 +19,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_PLANS_SF", "/root/testdata/sf0.001")
 
 
-def formatted_plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def main() -> None:
     from bench import HEADLINE
 
-    from film_media_etl_spark.plans import plan_summary
+    from film_media_etl_spark.plans import formatted_plan, plan_summary
     from film_media_etl_spark.queries import all_queries
     from film_media_etl_spark.session import get_spark
 
